@@ -14,6 +14,8 @@ Layout:
 - ``operators/``  DataFrame -> DataFrame operators (joins, tiling, dedup)
 - ``sources/``    deterministic synthetic generators + table loaders
 - ``plans/``      grid-spec planning, lineage/checkpoint, session config
+- ``queries.py``  the query registry: builders + DuckDB oracle SQL
+- ``pipeline.py`` the flagship pages -> cell -> PIP -> tile pipeline
 """
 
 __version__ = "0.1.0"

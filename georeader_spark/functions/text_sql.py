@@ -1,17 +1,17 @@
-"""JVM-side text extraction — the fast path of the extract stage.
+"""JVM-side text extraction — the extract stage of the flagship pipeline.
 
 The same extraction spec as kernels.text.extract_text (drop
 script/style with content, strip tags, unescape the five standard
 entities in fixed order, collapse whitespace, trim) expressed as a
 chain of built-in regexp/replace functions: whole-stage codegen, no
 Arrow transfer, no Python workers. Measured ~25-100x faster and far
-more stable than the Arrow-UDF path on this box (see BENCH notes).
+more stable than an Arrow UDF over the same kernel (see BENCH notes).
 
 Semantics note: Java's ``\\s`` is ASCII-only while Python's is
 Unicode-aware. The synthetic corpus contains only ASCII whitespace, and
-the three-way byte-identity test (JVM expr == Arrow UDF == kernel
-oracle, tests/test_spark_pages.py) pins the equivalence; a corpus with
-exotic whitespace would switch the pipeline to the UDF path.
+the byte-identity tests (kernel oracle == text, and JVM expr == text on
+every page, tests/test_spark_pages.py) pin the equivalence; a corpus
+with exotic whitespace would need Unicode-aware patterns here.
 
 Reference recipe being re-expressed: GeoTensor.load_bytes-style
 bytes->value decode (/root/reference/georeader/geotensor.py:2165-2214)

@@ -9,9 +9,9 @@ Scale shape (two 100 TB snapshots):
   column before the join projects bodies away), so the full-outer
   join moves only ``(url, 16-byte digest)`` — never page bodies.
 - the join shuffles on url; with both snapshots bucketed by url at
-  write time (the natural layout for a url-keyed corpus,
-  ``plans/bucketing.write_bucketed`` — zero-exchange join pinned by
-  tests/test_bucketing.py) it co-locates with zero movement.
+  write time (the natural layout for a url-keyed corpus, Spark's
+  ``DataFrameWriter.bucketBy`` + ``saveAsTable``) it co-locates with
+  zero movement.
 - output is partial-agg friendly downstream (per-host change rates =
   one more groupBy over the 4-valued status).
 """

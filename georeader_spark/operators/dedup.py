@@ -709,8 +709,9 @@ def corpus_digests(
 ) -> DataFrame:
     """Digest table of a corpus: ``(text_md5, canonical_id)`` — one row
     per distinct text. This is the table an incremental ingestion
-    pipeline persists (bucketed by text_md5, plans/bucketing) so every
-    later crawl deduplicates against it without reshuffling it."""
+    pipeline persists (bucketed by text_md5 with Spark's ``bucketBy``)
+    so every later crawl deduplicates against it without reshuffling
+    it."""
     return (
         docs.select(F.md5(F.col(text_col)).alias("text_md5"), F.col(id_col))
         .groupBy("text_md5")
@@ -732,7 +733,7 @@ def dedup_against_reference(
     100 TB shape: the digest is computed scan-side, the anti-join
     moves (16-byte hash) keys — never bodies; with the digest table
     bucketed by text_md5 at write time the recurring join co-locates
-    (plans/bucketing.write_bucketed, zero exchange on the ref side).
+    (Spark's ``bucketBy`` table layout, zero exchange on the ref side).
     """
     hashed = new_docs.withColumn("_h", F.md5(F.col(text_col)))
     return (

@@ -305,8 +305,10 @@ def lloyd_train_multi(
         # shuffle; the window then sorts ~64 * n_clusters rows per
         # group. If any group comes up short of the threshold filter
         # (possible only for degenerate tiny groups), fall back to the
-        # exact full window — both paths return the identical seed set,
-        # so the choice never changes a result bit.
+        # exact full window. Both paths return the same seed set as long
+        # as _h orders each group totally; on an xxhash64 tie at the
+        # n_clusters boundary (duplicate vectors, or a 64-bit collision)
+        # row_number may pick either tied row, in either path.
         counts = {
             r["grp"]: r["count"]
             for r in sliced.groupBy("grp").count().collect()

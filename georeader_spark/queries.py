@@ -17,6 +17,7 @@ Determinism rules that make cross-engine value-hash equality hold:
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Callable, Dict, Optional, Tuple
 
@@ -45,69 +46,57 @@ from .operators.catalog import greedy_set_cover_dedup
 CELL_R = 7
 ROLLUP_R = 4
 
-#: session-keyed parquet TABLE-HANDLE reuse (a lazy plan, never data):
-#: ``spark.read.parquet`` re-reads the footer schema and costs ~10 Py4J
-#: round trips per call, and the headline suite invokes it ~40 times
-#: per pass. Nothing is cached or materialized — every action still
-#: scans the files from disk; this is the moral equivalent of resolving
-#: ``spark.table(name)`` once per session.
-_PQ_HANDLES: Dict[Tuple[str, str], DataFrame] = {}
-
-
-def _pq(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    df = _PQ_HANDLES.get(key)
-    if df is None:
-        df = _PQ_HANDLES[key] = spark.read.parquet(path)
-    return df
-
 
 def _lazy_plan(fn):
-    """Reuse the built DataFrame per (session, sf_dir) for PURE-LAZY
-    query builders — ones that run no action, collect nothing and
-    checkpoint nothing, so the returned handle is just an immutable
-    logical plan and every count/collect still executes from parquet.
-    Applied only where construction is pure expression building (the
-    projection-family trees cost ~3k Py4J round trips per build).
+    """Reuse the built DataFrame per (session, key) for PURE-LAZY
+    builders of shape ``(spark, key) -> DataFrame`` — ones that run no
+    action, collect nothing and checkpoint nothing, so the returned
+    handle is just an immutable logical plan (never data) and every
+    count/collect still scans the parquet files from disk. Three kinds
+    of builder use it:
+
+    - ``_pq``: one ``spark.read.parquet`` handle per (session, path) —
+      each read re-reads the footer schema (~10 Py4J round trips) and
+      the headline suite reads ~40 times per pass; the moral equivalent
+      of resolving ``spark.table(name)`` once per session;
+    - ``_points``: the event-id point projection ~8 queries share;
+    - the projection-family query builders, whose expression trees cost
+      ~3k Py4J round trips per build.
+
     Builders with eager internal work (ring kNN, Lloyd training,
     localCheckpoint shapes) must NOT use this: reusing their handle
     would skip recomputation, i.e. cache results."""
-    import functools
-
     handles: Dict[Tuple[str, str], DataFrame] = {}
 
     @functools.wraps(fn)
-    def wrap(spark, sf_dir):
-        key = (spark.sparkContext.applicationId, sf_dir)
-        df = handles.get(key)
+    def wrap(spark, key):
+        memo_key = (spark.sparkContext.applicationId, key)
+        df = handles.get(memo_key)
         if df is None:
-            df = handles[key] = fn(spark, sf_dir)
+            df = handles[memo_key] = fn(spark, key)
         return df
 
     return wrap
+
+
+@_lazy_plan
+def _pq(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(path)
+
 
 #: deterministic Europe-bbox points from event ids (lattice 1e-3 deg)
 LON_SQL = "(-10.0 + ((event_id * 48271) % 40000) / 1000.0)"
 LAT_SQL = "(35.0 + ((event_id * 69621) % 25000) / 1000.0)"
 
 
-_POINTS_HANDLES: Dict[Tuple[str, str], DataFrame] = {}
-
-
+@_lazy_plan
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # same lazy-plan-handle reuse as _pq: ~8 queries build this exact
-    # projection; the DataFrame is immutable and holds no data
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _POINTS_HANDLES.get(key)
-    if df is not None:
-        return df
     ev = _pq(spark, f"{sf_dir}/events.parquet")
     lon = F.lit(-10.0) + (F.col("event_id") * 48271 % 40000) / F.lit(1000.0)
     lat = F.lit(35.0) + (F.col("event_id") * 69621 % 25000) / F.lit(1000.0)
-    df = _POINTS_HANDLES[key] = ev.select(
+    return ev.select(
         F.col("event_id"), F.col("ts"), lon.alias("lon"), lat.alias("lat")
     )
-    return df
 
 
 #: polygon fixture: 6 boxes + 2 triangles, vertices off the 1e-3 lattice

@@ -1,13 +1,10 @@
-"""Physical-plan shape assertions (the 100 TB design checks) +
-streaming batch-parity test.
+"""Physical-plan shape assertions (the 100 TB design checks).
 
 These tests read .explain() output: at scale the difference between a
 broadcast hash join and a shuffle join, or between a pushed and
 unpushed filter, is the difference between a job that works and one
 that doesn't (task brief: "explain('formatted') the plan and iterate").
 """
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -248,254 +245,6 @@ class TestPlanShapes:
         assert "Window" not in plan
 
 
-class TestStreaming:
-    def test_streaming_matches_batch(self, spark, tmp_path):
-        """AvailableNow drain of the streaming cell counts equals the
-        batch computation on the same input."""
-        from georeader_spark.functions.geo import cell_encode
-        from georeader_spark.pipeline import extract_stage
-        from georeader_spark.sources.pages import pages
-        from georeader_spark.streaming.cell_counts import (
-            run_available_now,
-            streaming_cell_counts,
-        )
-
-        src_dir = str(tmp_path / "pages")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        pdf = pages(spark, 2000)
-        pdf.write.parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-
-        stream = streaming_cell_counts(spark, src_dir, schema, r=7)
-        run_available_now(stream, out_dir, ckpt)
-        got = {
-            (r["day_start"], r["cell"]): r["n_pages"]
-            for r in spark.read.parquet(out_dir).collect()
-        }
-
-        batch = extract_stage(spark.read.parquet(src_dir)).where(
-            F.col("lon").isNotNull()
-        )
-        expect_df = (
-            batch.withColumn("cell", cell_encode(F.col("lon"), F.col("lat"), 7))
-            .groupBy(F.window("warc_ts", "1 day").alias("day"), "cell")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("day.start").alias("day_start"), "cell", "n")
-        )
-        expect = {(r["day_start"], r["cell"]): r["n"] for r in expect_df.collect()}
-        # append mode only emits windows the watermark has closed: the
-        # final (watermark + window) span of event time stays open at
-        # end-of-stream and is withheld — correct streaming semantics.
-        import datetime as dt
-
-        max_ts = max(k[0] for k in expect)
-        closed_cutoff = max_ts - dt.timedelta(days=3)
-        closed_expect = {k: v for k, v in expect.items() if k[0] <= closed_cutoff}
-        for k, v in closed_expect.items():
-            assert got.get(k) == v, k
-        for k in got:
-            assert expect.get(k) == got[k], k
-        assert len(got) >= len(closed_expect) > 0
-
-    def test_streaming_full_pipeline_matches_batch(self, spark, tmp_path):
-        """AvailableNow drain of the FULL streaming north-rule pipeline
-        (extract -> cell -> broadcast PIP join -> tile -> watermarked
-        window counts) equals the batch pipeline grouped the same way."""
-        from georeader_spark.functions.geo import cell_encode
-        from georeader_spark.operators.pip_join import pip_join
-        from georeader_spark.operators.tiling import assign_points_to_tiles
-        from georeader_spark.pipeline import extract_stage, pip_polytable
-        from georeader_spark.queries import CELL_R, TILE_SIZE, TILE_TRANSFORM
-        from georeader_spark.sources.pages import pages
-        from georeader_spark.streaming.cell_counts import (
-            run_available_now,
-            streaming_pages_pipeline,
-        )
-
-        src_dir = str(tmp_path / "pages")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        pages(spark, 2000).write.parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-
-        stream = streaming_pages_pipeline(spark, src_dir, schema)
-        run_available_now(stream, out_dir, ckpt)
-        got = {
-            (r["day_start"], r["cell"], r["poly_id"], r["tile_row"],
-             r["tile_col"]): r["n_pages"]
-            for r in spark.read.parquet(out_dir).collect()
-        }
-        assert got, "stream emitted no closed windows"
-
-        batch = extract_stage(spark.read.parquet(src_dir)).where(
-            F.col("text_ok") & F.col("lon").isNotNull()
-        ).withColumn("cell", cell_encode(F.col("lon"), F.col("lat"), CELL_R))
-        joined = pip_join(
-            batch.select("warc_ts", "lon", "lat", "cell"), pip_polytable(), r=6
-        )
-        tiled = assign_points_to_tiles(
-            joined, TILE_TRANSFORM, TILE_SIZE, x_col="lon", y_col="lat"
-        )
-        expect_df = (
-            tiled.groupBy(
-                F.window("warc_ts", "1 day").alias("day"),
-                "cell", "poly_id", "tile_row", "tile_col",
-            )
-            .agg(F.count("*").alias("n"))
-            .select(F.col("day.start").alias("day_start"), "cell",
-                    "poly_id", "tile_row", "tile_col", "n")
-        )
-        expect = {
-            (r["day_start"], r["cell"], r["poly_id"], r["tile_row"],
-             r["tile_col"]): r["n"]
-            for r in expect_df.collect()
-        }
-        # append mode withholds windows the watermark has not closed
-        for k, v in got.items():
-            assert expect.get(k) == v, k
-
-    def test_streaming_exact_dedup_matches_batch(self, spark, tmp_path):
-        """First-arrival streaming dedup == batch keep-first when the
-        whole input drains in one trigger (intra-batch winner is
-        min(doc_id) by contract)."""
-        from georeader_spark.operators.dedup import exact_dedup_keep_first
-        from georeader_spark.streaming.cell_counts import run_available_now
-        from georeader_spark.streaming.dedup import streaming_exact_dedup
-
-        src_dir = str(tmp_path / "docs")
-        docs = spark.range(0, 1000).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("body-"), (F.col("id") % 300).cast("string"))
-            .alias("text"),
-        )
-        docs.write.parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-
-        stream = streaming_exact_dedup(
-            spark.readStream.schema(schema).parquet(src_dir)
-        )
-        out_dir = str(tmp_path / "out")
-        run_available_now(stream, out_dir, str(tmp_path / "ckpt"))
-        got = {r.text_md5: r.doc_id
-               for r in spark.read.parquet(out_dir).collect()}
-
-        kept = exact_dedup_keep_first(spark.read.parquet(src_dir))
-        expect = {
-            r.md5: r.doc_id
-            for r in kept.select(
-                F.md5(F.encode("text", "UTF-8")).alias("md5"), "doc_id"
-            ).collect()
-        }
-        assert got == expect
-        assert len(got) == 300
-
-    def test_streaming_exact_dedup_restart_no_reemit(self, spark, tmp_path):
-        """Checkpointed seen-state survives a restart: a second drain
-        over late-arriving duplicates emits NOTHING for already-seen
-        bodies and exactly the new distinct ones."""
-        from georeader_spark.streaming.cell_counts import run_available_now
-        from georeader_spark.streaming.dedup import streaming_exact_dedup
-
-        src_dir = str(tmp_path / "docs")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        part1 = spark.range(0, 400).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("b-"), (F.col("id") % 100).cast("string"))
-            .alias("text"),
-        )
-        part1.write.parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-
-        def drain():
-            stream = streaming_exact_dedup(
-                spark.readStream.schema(schema).parquet(src_dir)
-            )
-            run_available_now(stream, out_dir, ckpt)
-
-        drain()
-        first = {r.text_md5: r.doc_id
-                 for r in spark.read.parquet(out_dir).collect()}
-        assert len(first) == 100
-
-        # late batch: 150 docs, 100 duplicate every part-1 body, 50 new
-        part2 = spark.range(1000, 1150).select(
-            F.col("id").alias("doc_id"),
-            F.when(
-                F.col("id") < 1100,
-                F.concat(F.lit("b-"), (F.col("id") % 100).cast("string")),
-            ).otherwise(
-                F.concat(F.lit("new-"), F.col("id").cast("string"))
-            ).alias("text"),
-        )
-        part2.write.mode("append").parquet(src_dir)
-        drain()
-        after = {r.text_md5: r.doc_id
-                 for r in spark.read.parquet(out_dir).collect()}
-        # nothing re-emitted, survivors unchanged for seen bodies
-        assert all(after[k] == v for k, v in first.items())
-        # exactly the 50 new distinct bodies appeared, ids from part 2
-        new = {k: v for k, v in after.items() if k not in first}
-        assert len(new) == 50 and all(v >= 1100 for v in new.values())
-
-    def test_stateful_sessions_match_batch(self, spark, tmp_path):
-        """applyInPandasWithState sessionizer: the CLOSED sessions the
-        stream emits equal the batch gap-sessionization minus each
-        user's final (still-open) session."""
-        from georeader_spark.streaming.cell_counts import run_available_now
-        from georeader_spark.streaming.stateful_sessions import (
-            SESSION_GAP_S,
-            streaming_sessions,
-        )
-
-        # deterministic events: 20 users x 40 events with gaps > and <
-        # the session threshold
-        rows = []
-        for u in range(20):
-            t = 1_700_000_000 + u * 17
-            for i in range(40):
-                t += 120 if (i % 7) else (SESSION_GAP_S + 60)
-                rows.append((u, t))
-        src_dir = str(tmp_path / "ev")
-        spark.createDataFrame(rows, "user_id long, ts_epoch long").repartition(
-            4
-        ).write.parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        out_dir = str(tmp_path / "sess_out")
-        ckpt = str(tmp_path / "sess_ckpt")
-        run_available_now(streaming_sessions(stream), out_dir, ckpt)
-        got = {
-            (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-            for r in spark.read.parquet(out_dir).collect()
-        }
-
-        # batch oracle: per-user gap split in python
-        import collections
-
-        by_user = collections.defaultdict(list)
-        for u, t in rows:
-            by_user[u].append(t)
-        expect = set()
-        for u, ts in by_user.items():
-            ts.sort()
-            start, last, n = ts[0], ts[0], 1
-            sessions = []
-            for t in ts[1:]:
-                if t - last > SESSION_GAP_S:
-                    sessions.append((u, start, last, n))
-                    start, last, n = t, t, 1
-                else:
-                    last, n = t, n + 1
-            # final session stays OPEN in state (timeout not reached in
-            # an AvailableNow drain) — excluded from parity
-            expect.update(sessions)
-        assert got == expect
-        assert len(expect) > 0
-
-
 class TestNewOpPlanShapes:
     def test_read_rpcs_no_python_in_plan(self, spark):
         """The RPC forward model must compile to JVM expressions — the
@@ -667,133 +416,3 @@ class TestRound5PlanShapes:
         plan = _plan(semantic_dedup(vecs, cents))
         assert "CartesianProduct" not in plan
         assert "cluster" in plan
-
-
-class TestStreamingLshDedup:
-    """Streaming MinHash-LSH near-dup filter (streaming/lsh_dedup.py)
-    vs a batch reference applying the identical bucket/first rule."""
-
-    @staticmethod
-    def _corpus(spark):
-        # 120 docs over a 40-word vocab: ids >= 1000 are exact copies
-        # of id-1000 (J=1, must always flag); 60..119 share long
-        # prefixes (near-dups, flagged when any band collides)
-        base = spark.range(0, 120).select(
-            F.col("id").alias("doc_id"),
-            F.concat(
-                F.lit("tok"),
-                ((F.col("id") % 60) % 7).cast("string"),
-                F.lit(" "),
-                F.array_join(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(25)),
-                        lambda i: F.concat(
-                            F.lit("w"),
-                            F.pmod(
-                                (F.col("id") % 60) * 3 + i * 7, F.lit(40)
-                            ).cast("string"),
-                        ),
-                    ),
-                    " ",
-                ),
-            ).alias("text"),
-        )
-        copies = base.where(F.col("doc_id") < 20).select(
-            (F.col("doc_id") + 1000).alias("doc_id"), "text"
-        )
-        return base.unionByName(copies)
-
-    def test_single_drain_matches_batch_rule(self, spark, tmp_path):
-        from georeader_spark.operators.dedup import _minhash_banded
-        from georeader_spark.streaming.cell_counts import run_available_now
-        from georeader_spark.streaming.lsh_dedup import (
-            lsh_verdicts_per_doc,
-            streaming_lsh_verdicts,
-        )
-
-        src_dir = str(tmp_path / "docs")
-        self._corpus(spark).write.parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-
-        stream = streaming_lsh_verdicts(
-            spark.readStream.schema(schema).parquet(src_dir)
-        )
-        out_dir = str(tmp_path / "out")
-        run_available_now(stream, out_dir, str(tmp_path / "ckpt"))
-        got = {
-            r["doc_id"]: (r["is_dup"], r["dup_of"])
-            for r in lsh_verdicts_per_doc(
-                spark.read.parquet(out_dir)
-            ).collect()
-        }
-
-        # batch reference: same banding, bucket winner = min doc_id
-        bb = _minhash_banded(
-            spark.read.parquet(src_dir), "doc_id", "text", 16, 4, 3
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bucket")
-        ref = (
-            bb.withColumn("first_id", F.min("doc_id").over(w))
-            .groupBy("doc_id")
-            .agg(
-                F.max((F.col("first_id") != F.col("doc_id")).cast("int"))
-                .cast("boolean")
-                .alias("is_dup"),
-                F.min(
-                    F.when(
-                        F.col("first_id") != F.col("doc_id"),
-                        F.col("first_id"),
-                    )
-                ).alias("dup_of"),
-            )
-        )
-        expect = {
-            r["doc_id"]: (r["is_dup"], r["dup_of"]) for r in ref.collect()
-        }
-        assert got == expect
-        # exact copies (J=1) always flag; the claimant is an original
-        # (possibly an even-earlier near-dup of the copy's source)
-        for i in range(20):
-            is_dup, dup_of = got[1000 + i]
-            assert is_dup and dup_of is not None and dup_of < 120
-        assert len(got) == 140
-
-    def test_cross_batch_state_flags_late_near_dups(self, spark, tmp_path):
-        """Buckets claimed in drain 1 persist: re-sent bodies in drain
-        2 flag as dups of the ORIGINAL claimant, not of each other."""
-        from georeader_spark.streaming.cell_counts import run_available_now
-        from georeader_spark.streaming.lsh_dedup import (
-            lsh_verdicts_per_doc,
-            streaming_lsh_verdicts,
-        )
-
-        src_dir = str(tmp_path / "docs")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        base = self._corpus(spark).where(F.col("doc_id") < 120)
-        base.write.parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-
-        def drain():
-            stream = streaming_lsh_verdicts(
-                spark.readStream.schema(schema).parquet(src_dir)
-            )
-            run_available_now(stream, out_dir, ckpt)
-
-        drain()
-        # late arrivals: exact copies of docs 0..19 under ids 5000+
-        base.where(F.col("doc_id") < 20).select(
-            (F.col("doc_id") + 5000).alias("doc_id"), "text"
-        ).write.mode("append").parquet(src_dir)
-        drain()
-        got = {
-            r["doc_id"]: (r["is_dup"], r["dup_of"])
-            for r in lsh_verdicts_per_doc(
-                spark.read.parquet(out_dir)
-            ).collect()
-        }
-        for i in range(20):
-            is_dup, dup_of = got[5000 + i]
-            assert is_dup and dup_of is not None and dup_of < 120

@@ -1416,90 +1416,3 @@ class TestCleaningFuzz:
         """
         for doc_id, c, nl, nk in con.execute(q).fetchall():
             assert got[doc_id] == (c, nl, nk), (doc_id, got[doc_id], (c, nl, nk))
-
-
-class TestQualityClassifier:
-    """Distributed full-batch logreg (operators/classifier) vs a
-    single-process numpy reference with identical hyperparameters."""
-
-    @staticmethod
-    def _numpy_ref(X, y, dim, iters, lr, l2):
-        w = np.zeros(dim + 1)
-        n = len(y)
-        for _ in range(iters):
-            z = X @ w[:-1] + w[-1]
-            p = 1.0 / (1.0 + np.exp(-z))
-            resid = p - y
-            g = np.concatenate([X.T @ resid, [resid.sum()]]) / n
-            g[:-1] += l2 * w[:-1]
-            w -= lr * g
-        return w
-
-    def test_matches_numpy_and_separates(self, spark, sf_dir):
-        from georeader_spark.operators.classifier import score_col, train_logreg
-        from georeader_spark.operators.embed import hash_embed
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # planted linear concept: label = [x . w* > 0] for a fixed
-        # integer direction — linearly separable by construction
-        wstar = F.array(*[F.lit(float((j * 7) % 5 - 2)) for j in range(16)])
-        margin = F.aggregate(
-            F.zip_with("embedding", wstar, lambda a, c: a * c),
-            F.lit(0.0), lambda s, v: s + v,
-        )
-        feats = hash_embed(docs, dim=16).withColumn(
-            "label", (margin > 0).cast("double")
-        )
-        w = train_logreg(feats, dim=16, iters=15, lr=0.3)
-
-        rows = feats.collect()
-        X = np.stack([np.asarray(r["embedding"]) for r in rows])
-        y = np.array([r["label"] for r in rows])
-        w_ref = self._numpy_ref(X, y, 16, 15, 0.3, 1e-4)
-        # summation-order noise only: distributed == numpy to ~1e-9
-        np.testing.assert_allclose(np.asarray(w), w_ref, rtol=1e-7,
-                                   atol=1e-9)
-
-        scored = feats.withColumn("p", score_col(w, F.col("embedding")))
-        acc = scored.select(
-            F.avg(((F.col("p") > 0.5).cast("double") == F.col("label"))
-                  .cast("double"))
-        ).first()[0]
-        # separable-ish synthetic task: the learned filter must beat
-        # chance decisively (hash features of longer docs have larger
-        # magnitudes, so the signal exists)
-        assert acc > 0.8, acc
-
-    def test_gradient_reduces_on_cluster(self, spark, sf_dir):
-        """The per-iteration gradient is reduced cluster-side: the
-        driver receives exactly dim+1 (pos, sum) rows regardless of
-        partition/batch count, and the plan has a partial HashAggregate
-        above the MapInPandas node (no per-batch rows to the driver)."""
-        import numpy as np
-
-        from georeader_spark.operators.classifier import _gradient_terms
-        from georeader_spark.operators.embed import hash_embed
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        feats = (
-            hash_embed(docs, dim=16)
-            .withColumn("label", (F.col("doc_id") % 2 == 0).cast("double"))
-            .repartition(16)  # many batches; the collect size must not grow
-        )
-        g = _gradient_terms(feats, np.zeros(17), "label", "embedding")
-        plan = g._jdf.queryExecution().executedPlan().toString()
-        assert "HashAggregate" in plan, plan
-        assert plan.index("HashAggregate") < plan.index("MapInPandas"), plan
-        rows = g.collect()
-        assert len(rows) == 17, len(rows)
-
-    def test_score_col_is_scan_side(self, spark, sf_dir):
-        from georeader_spark.operators.classifier import score_col
-        from georeader_spark.operators.embed import hash_embed
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        feats = hash_embed(docs, dim=16)
-        plan_df = feats.select(score_col([0.1] * 16 + [0.0],
-                                         F.col("embedding")).alias("p"))
-        plan = plan_df._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

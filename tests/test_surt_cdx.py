@@ -88,28 +88,3 @@ def test_cdxj_line_shape(cdx):
     assert set(d) == {"url", "mime", "status", "digest", "length",
                       "offset", "filename"}
     assert d["filename"].endswith(".warc")
-
-
-def test_streaming_cdx_batch_parity(spark, tmp_path):
-    """Streaming WARC->CDX (AvailableNow) equals the batch path, and a
-    restart with the same checkpoint reprocesses nothing."""
-    from georeader_spark.streaming.warc_index import (
-        run_available_now, streaming_cdx)
-
-    p = pages(spark, 80)
-    files = warc_files(p, records_per_file=20)
-    warc_dir = str(tmp_path / "warc")
-    files.write.parquet(warc_dir)
-
-    out_dir = str(tmp_path / "cdx")
-    ckpt = str(tmp_path / "ckpt")
-    run_available_now(streaming_cdx(spark, warc_dir), out_dir, ckpt)
-
-    batch = {tuple(r) for r in
-             cdx_records(parse_warc(spark.read.parquet(warc_dir))).collect()}
-    streamed = {tuple(r) for r in spark.read.parquet(out_dir).collect()}
-    assert streamed == batch and len(batch) == 80
-
-    # restart: checkpointed file-source state -> nothing reprocessed
-    run_available_now(streaming_cdx(spark, warc_dir), out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == 80
