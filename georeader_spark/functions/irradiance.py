@@ -27,6 +27,7 @@ from typing import List, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.session import local_frame
 from .reflectance import srf_gaussian_weight, srf_gaussian_weight_sql
 
 #: (wavelength nm, irradiance mW/m^2/nm) — coarse public solar curve,
@@ -54,8 +55,8 @@ def irradiance_table(spark: SparkSession, csv_path: str | None = None) -> DataFr
                 F.col("irradiance").cast("double"),
             )
         )
-    return spark.createDataFrame(
-        BUILTIN_LUT, "wavelength_nm double, irradiance double"
+    return local_frame(
+        spark, BUILTIN_LUT, "wavelength_nm double, irradiance double"
     )
 
 

@@ -4,8 +4,14 @@ The same extraction spec as kernels.text.extract_text (drop
 script/style with content, strip tags, unescape the five standard
 entities in fixed order, collapse whitespace, trim) expressed as a
 chain of built-in regexp/replace functions: whole-stage codegen, no
-Arrow transfer, no Python workers. Measured ~25-100x faster and far
-more stable than an Arrow UDF over the same kernel (see BENCH notes).
+Arrow transfer, no Python workers. (Historical and not re-measured:
+when extraction moved to the JVM it measured ~25-100x faster and far
+more stable than an Arrow UDF over the same kernel.)
+
+The functions take the decoded page (``html_string_col``) or the geotag
+match (``geotag_match_col``), never the raw ``html`` bytes: the caller
+computes each of those once, in a projection of its own
+(pipeline.extract_stage), and every consumer reads the column.
 
 Semantics note: Java's ``\\s`` is ASCII-only while Python's is
 Unicode-aware. The synthetic corpus contains only ASCII whitespace, and
@@ -29,10 +35,14 @@ _ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&a
 _GEO_RE = r'<meta\s+name="geo\.position"\s+content="(-?\d+(?:\.\d+)?);(-?\d+(?:\.\d+)?)"'
 
 
-def extract_text_col(html: Column) -> Column:
-    """html binary -> extracted text, byte-equal to
+def html_string_col(html: Column) -> Column:
+    """html binary -> UTF-8 string, the input of every extractor here."""
+    return F.decode(html, "UTF-8")
+
+
+def extract_text_col(s: Column) -> Column:
+    """decoded html -> extracted text, byte-equal to
     kernels.text.extract_text on ASCII-whitespace corpora."""
-    s = F.decode(html, "UTF-8")
     s = F.regexp_replace(s, r"(?is)<(script|style)\b[^>]*>.*?</\1>", " ")
     s = F.regexp_replace(s, r"<[^>]*>", " ")
     for ent, ch in _ENTITIES:
@@ -40,19 +50,23 @@ def extract_text_col(html: Column) -> Column:
     return F.trim(F.regexp_replace(s, r"\s+", " "))
 
 
-def _geotag_match(html: Column) -> Column:
-    """Group-0 geotag match. lon and lat both derive from this IDENTICAL
-    subtree, so whole-stage codegen's subexpression elimination runs the
-    full-html regex ONCE per row; the per-field split is substring_index
-    over the ~40-char match (the previous group-1/group-2 extracts were
-    distinct expressions and scanned the html twice — measured ~0.7 s
-    per pass over 4M pages at local[32])."""
-    s = F.decode(html, "UTF-8")
+def geotag_match_col(s: Column) -> Column:
+    """decoded html -> group-0 geotag match ("" when there is none).
+
+    lon and lat both split this ~40-char match with substring_index, so
+    the full-html regex must run once per row. Spark 4.1's codegen
+    subexpression elimination does not reach into ``CASE`` branches, so
+    an identical match subtree inside the lon and lat ``CASE`` columns
+    still ran more than once per row: a noop write of lon and lat took
+    0.26 s per 100k pages, against 0.18 s with the decode and the match
+    in projections of their own (local[4]). Callers therefore project
+    the match as a column of its own and pass that column to
+    geotag_lon_col and geotag_lat_col."""
     return F.regexp_extract(s, _GEO_RE, 0)
 
 
-def geotag_lon_col(html: Column) -> Column:
-    g = _geotag_match(html)
+def geotag_lon_col(g: Column) -> Column:
+    """geotag match -> lon (null when there is no match)."""
     # match shape: <meta ... content="LAT;LON"  -> LON between ';' and '"'
     lon = F.substring_index(F.substring_index(g, ";", -1), '"', 1)
     return F.when(g == "", F.lit(None).cast("double")).otherwise(
@@ -60,8 +74,8 @@ def geotag_lon_col(html: Column) -> Column:
     )
 
 
-def geotag_lat_col(html: Column) -> Column:
-    g = _geotag_match(html)
+def geotag_lat_col(g: Column) -> Column:
+    """geotag match -> lat (null when there is no match)."""
     lat = F.substring_index(F.substring_index(g, 'content="', -1), ";", 1)
     return F.when(g == "", F.lit(None).cast("double")).otherwise(
         lat.cast("double")

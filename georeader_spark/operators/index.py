@@ -219,7 +219,8 @@ def score_bm25(
     n_docs, avgdl = dls.agg(
         F.count("*"), F.avg("dl")
     ).first()
-    tl = [t.lower() for t in set(terms)]
+    # sorted: the plan's IN list must not follow PYTHONHASHSEED
+    tl = sorted({t.lower() for t in terms})
     hits = (
         idx.where(F.col("term").isin(tl))
         .select("term", "df", F.explode("postings").alias("pp"))

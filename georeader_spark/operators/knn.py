@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geo import cell_encode, haversine_m
 from ..kernels import cells as kcells
+from ..plans.session import local_frame
 
 
 def knn_bruteforce(
@@ -149,7 +150,7 @@ def knn_join(
             for dy in range(-r, r + 1)
             if max(abs(dx), abs(dy)) > prev_r
         ]
-        off_df = spark.createDataFrame(offsets, "dx long, dy long")
+        off_df = local_frame(spark, offsets, "dx long, dy long")
         ring = pending.join(F.broadcast(off_df)).select(
             "_q_id", "_qx", "_qy",
             (F.col("_qcx") + F.col("dx")).alias("_cx"),
@@ -249,8 +250,8 @@ def knn_ring(
             qcell = kcells.encode(q_lon_v, q_lat_v, r)
             for c in kcells.ring(qcell, k_ring):
                 rows.append((q_id_v, q_lon_v, q_lat_v, c))
-        ring_df = spark.createDataFrame(
-            rows, "q_id long, q_lon double, q_lat double, cell long"
+        ring_df = local_frame(
+            spark, rows, "q_id long, q_lon double, q_lat double, cell long"
         )
         cand = pts.join(F.broadcast(ring_df), "cell", "inner")
         dist = haversine_m(F.col(lon_col), F.col(lat_col), F.col("q_lon"), F.col("q_lat"))
@@ -292,8 +293,8 @@ def knn_ring(
 
     if pending:
         # fall back to brute force for stragglers (sparse regions)
-        qdf = spark.createDataFrame(
-            list(pending), "q_id long, q_lon double, q_lat double"
+        qdf = local_frame(
+            spark, list(pending), "q_id long, q_lon double, q_lat double"
         )
         bf = knn_bruteforce(
             pts, qdf, k, point_id=point_id, lon_col=lon_col, lat_col=lat_col

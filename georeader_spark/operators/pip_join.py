@@ -32,6 +32,7 @@ from pyspark.sql.types import BooleanType
 from ..functions.geo import cell_encode
 from ..kernels import cells as kcells
 from ..kernels import geometry as kgeom
+from ..plans.session import local_frame
 
 PolyTable = Sequence[Tuple[int, List[kgeom.PolygonT]]]  # (poly_id, multipolygon)
 
@@ -126,7 +127,6 @@ def pip_join(
     """
     spark = points.sparkSession
     cover = polygon_cover(polygons, r)
-    cover_df = spark.createDataFrame(cover, "_cover_cell long, poly_id int")
 
     all_convex = all(
         len(mp) >= 1 and all(len(poly) == 1 and _is_convex(poly[0]) for poly in mp)
@@ -142,6 +142,7 @@ def pip_join(
             spark, points, polygons, cover, lon_col, lat_col, r, how
         )
 
+    cover_df = local_frame(spark, cover, "_cover_cell long, poly_id int")
     # geometry broadcast once per executor for the refine UDF
     sc = spark.sparkContext
     geom_bc = sc.broadcast({int(pid): mp for pid, mp in polygons})
@@ -240,7 +241,7 @@ def _pip_join_exprs(
         f"_e{i}_pad boolean"
         for i in range(max_edges)
     )
-    coeff_df = spark.createDataFrame(edge_rows, schema)
+    coeff_df = local_frame(spark, edge_rows, schema)
 
     # ONE F.expr over a locally-built SQL string: the per-edge Column
     # composition was ~1400 Py4J round trips (~0.5 s of query-build

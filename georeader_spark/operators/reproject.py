@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 
 from ..kernels.affine import Affine
 from ..kernels.windows import Window, round_outer_window, window_from_bounds
+from ..plans.session import local_frame
 
 TILE = 128
 
@@ -266,8 +267,8 @@ def resample_tiles(
                             sr, sc,
                         )
                     )
-    plan = spark.createDataFrame(
-        plan_rows,
+    plan = local_frame(
+        spark, plan_rows,
         "dst_trow long, dst_tcol long, dst_h int, dst_w int, "
         "src_col_off long, src_row_off long, src_w_width int, src_w_height int, "
         "tile_row long, tile_col long",
@@ -598,8 +599,8 @@ def gaussian_blur_tiles(
             for sr in range(sr0, sr1 + 1):
                 for sc in range(sc0, sc1 + 1):
                     plan_rows.append((trow, tcol, h, w, sr, sc))
-    plan = spark.createDataFrame(
-        plan_rows,
+    plan = local_frame(
+        spark, plan_rows,
         "dst_trow long, dst_tcol long, dst_h int, dst_w int, tile_row long, tile_col long",
     )
     gathered = tiles.join(F.broadcast(plan), ["tile_row", "tile_col"], "inner")

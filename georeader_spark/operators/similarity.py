@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from ..plans.session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -730,8 +732,8 @@ def ann_topk_pq(
             luts.append([float(x) for x in d])
         lut_rows.append((int(r[q_id]), luts))
     spark = vectors.sparkSession
-    lut_df = F.broadcast(spark.createDataFrame(
-        lut_rows, f"{q_id} int, lut array<array<double>>"
+    lut_df = F.broadcast(local_frame(
+        spark, lut_rows, f"{q_id} int, lut array<array<double>>"
     ))
 
     R = refine_factor * k
@@ -857,8 +859,8 @@ def ann_topk_ivfpq(
                 luts.append([float(x) for x in ((cb[s] - rs[None, :]) ** 2).sum(axis=1)])
             lut_rows.append((int(r[q_id]), int(li), luts))
     spark = vectors.sparkSession
-    lut_df = F.broadcast(spark.createDataFrame(
-        lut_rows, f"{q_id} int, list_id int, lut array<array<double>>"
+    lut_df = F.broadcast(local_frame(
+        spark, lut_rows, f"{q_id} int, list_id int, lut array<array<double>>"
     ))
 
     adc = None

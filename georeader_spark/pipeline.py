@@ -9,7 +9,11 @@ pages(url, warc_ts, html, text, lang)
   ④ tile     — window/tile assignment under the Europe grid spec
   ⑤ metrics  — per-(cell, poly) counts (the cell-histogram metric)
 
-Scale shape: no stage runs Python workers. ①②④ are codegen
+Scale shape: no stage runs Python workers, and no relation is a
+Python RDD (tests/test_plan_contracts.py pins both on the executed
+plan: no ``Scan ExistingRDD``, one decode, one geotag regex). The
+driver-side relations (the gate, the PIP coefficients) are JVM
+``LocalRelation``s built by plans.session.local_frame. ①②④ are codegen
 expressions; ③ joins against a broadcast relation (no shuffle of the
 pages side) and refines with JVM expressions; ⑤ is a partial-agg
 groupBy — the only wide dependency in the whole pipeline, keyed by
@@ -26,9 +30,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.geo import cell_encode
-from .functions.text_sql import extract_text_col, geotag_lat_col, geotag_lon_col
+from .functions.text_sql import (
+    extract_text_col,
+    geotag_lat_col,
+    geotag_lon_col,
+    geotag_match_col,
+    html_string_col,
+)
 from .operators.pip_join import boxes_to_polytable, pip_join
 from .operators.tiling import assign_points_to_tiles
+from .plans.session import local_frame
 from .queries import CELL_R, PIP_BOXES, PIP_TRIS, TILE_SIZE, TILE_TRANSFORM
 from .sources.pages import pages as synth_pages
 
@@ -38,14 +49,21 @@ def extract_stage(pages: DataFrame) -> DataFrame:
     (whole-stage codegen — "UDFs are the slow path"). The north-rule
     byte identity (ext_text == text) is carried as the ``text_ok``
     column so a violation is observable as a row-count drop (and
-    test-asserted to be zero)."""
-    html = F.col("html")
-    return pages.withColumns(
-        {
-            "ext_text": extract_text_col(html),
-            "lon": geotag_lon_col(html),
-            "lat": geotag_lat_col(html),
-        }
+    test-asserted to be zero).
+
+    The decoded page and the geotag match each get a projection of
+    their own. Each is referenced twice by the projection above it, and
+    CollapseProject does not inline a non-cheap expression into a
+    Project that references it twice, so the decode and each regex run
+    once per row (pinned by tests/test_plan_contracts.py)."""
+    cols = pages.columns
+    decoded = pages.withColumn("_html_s", html_string_col(F.col("html")))
+    matched = decoded.withColumn("_geo", geotag_match_col(F.col("_html_s")))
+    return matched.select(
+        *cols,
+        extract_text_col(F.col("_html_s")).alias("ext_text"),
+        geotag_lon_col(F.col("_geo")).alias("lon"),
+        geotag_lat_col(F.col("_geo")).alias("lat"),
     ).withColumn("text_ok", F.col("ext_text") == F.col("text"))
 
 
@@ -81,10 +99,9 @@ def pages_pipeline(
     # DataFilters, re-evaluating the html decode + extraction regexes
     # per reference (measured: decode ran 3x/row, the geotag regex
     # 2x/row). A predicate referencing both join sides cannot sink, so
-    # the extraction Project evaluates ONCE and codegen CSE shares the
-    # decode across ext_text/lon/lat. Same structural trick as the PIP
-    # refine's coefficients-as-broadcast-columns.
-    gate = F.broadcast(spark.createDataFrame([(True,)], "_pass boolean"))
+    # the extraction projections evaluate ONCE. Same structural trick
+    # as the PIP refine's coefficients-as-broadcast-columns.
+    gate = F.broadcast(local_frame(spark, [(True,)], "_pass boolean"))
     ok = extracted.join(
         gate,
         (F.col("text_ok") & F.col("lon").isNotNull()) == F.col("_pass"),

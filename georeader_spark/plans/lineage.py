@@ -24,6 +24,8 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 
 class StageStore:
     """Stage checkpoint store with lineage records.
@@ -274,7 +276,8 @@ def salted_join(
             "salt", F.lit(0)
         )
     else:
-        hot = spark.createDataFrame(
+        hot = local_frame(
+            spark,
             [(k,) for k in hot_keys],
             f"_hot_key {facts.schema[key_col].dataType.simpleString()}",
         )

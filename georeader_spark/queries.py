@@ -38,6 +38,7 @@ from .operators.knn import knn_bruteforce, knn_ring
 from .operators.multimodal import media_features, synth_media
 from .operators.pip_join import boxes_to_polytable, pip_join
 from .operators.catalog import greedy_set_cover_dedup
+from .plans.session import local_frame
 
 # ---------------------------------------------------------------------------
 # shared fixtures (identical literals on both engines)
@@ -318,7 +319,8 @@ def q_knn_bruteforce(spark, sf_dir):
     pts = _points(spark, sf_dir).select("event_id", "lon", "lat").repartition(
         spark.sparkContext.defaultParallelism
     )
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [
             (q, lon, lat, math.cos(math.radians(lat)))
             for q, lon, lat in KNN_QUERIES
@@ -442,8 +444,10 @@ def q_knn_ring(spark, sf_dir):
             qcos = math.cos(math.radians(qlat))
             for c in kcells.ring(qcell, radius[q]):
                 rows.append((q, c, qlon, qlat, qcos))
-        ring_df = spark.createDataFrame(
-            rows, "q_id int, cell long, q_lon double, q_lat double, q_cos double"
+        ring_df = local_frame(
+            spark,
+            rows,
+            "q_id int, cell long, q_lon double, q_lat double, q_cos double",
         )
         cand = pts_c.join(F.broadcast(ring_df), "cell")
         # d2 from broadcast-side columns: the same IEEE ops on the same
@@ -483,8 +487,8 @@ def q_knn_ring(spark, sf_dir):
         for q, _, _ in pending:
             radius[q] *= 2
 
-    results = spark.createDataFrame(
-        done_rows, "q_id int, point_id long, rank int"
+    results = local_frame(
+        spark, done_rows, "q_id int, point_id long, rank int"
     ) if done_rows else None
     if pending:
         ids = [p[0] for p in pending]
@@ -5237,7 +5241,8 @@ def q_griddata_exact(spark, sf_dir):
         (F.lit(-11.0) + (F.col("id") * 48271 % 42000) / 1000.0).alias("x"),
         (F.lit(34.0) + (F.col("id") * 69621 % 27000) / 1000.0).alias("y"),
     )
-    corners = spark.createDataFrame(
+    corners = local_frame(
+        spark,
         [(-12.0, 33.0), (32.0, 33.0), (-12.0, 62.0), (32.0, 62.0)],
         "x double, y double",
     )
@@ -5321,7 +5326,7 @@ def q_ann_pq_adc_exact(spark, sf_dir):
         ]
         lut_rows.append((qid, luts))
     lut_df = F.broadcast(
-        spark.createDataFrame(lut_rows, "q_id int, lut array<array<double>>")
+        local_frame(spark, lut_rows, "q_id int, lut array<array<double>>")
     )
     out = adc_rank(codes, lut_df, m, R=10)
     return out.select(

@@ -143,3 +143,22 @@ def test_bm25_closed_form(spark, idx):
     assert set(both) == {1, 2, 3}
     with pytest.raises(ValueError):
         score_bm25(idx, dls, [])
+
+
+def test_bm25_term_list_is_sorted_in_plan(spark, idx):
+    """The plan's ``term IN (...)`` list is the sorted, lower-cased,
+    de-duplicated terms, whatever order (and PYTHONHASHSEED) the
+    caller's set iteration would give: plan-text fingerprints stay
+    stable across processes."""
+    import re
+
+    from georeader_spark.operators.index import doc_lengths, score_bm25
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the dog sat")],
+        "doc_id long, text string",
+    )
+    out = score_bm25(idx, doc_lengths(docs), ["sat", "Dog", "mat", "cat", "dog"])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    lists = re.findall(r"term#\d+ IN \(([^)]*)\)", plan)
+    assert lists == ["cat,dog,mat,sat"], plan

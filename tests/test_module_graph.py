@@ -5,6 +5,10 @@ contract, the query registry, the flagship pipeline and the jobs.
 A module that only its own tests import is dead weight: it costs test
 time and review, and nothing in the system runs it. Imports are read
 with ``ast`` (function-local imports included), never executed.
+
+Driver-side relations go through ``plans.session.local_frame``: no
+``createDataFrame`` call elsewhere in the package, since a list-backed
+one plans a Python RDD and runs Python tasks on every action.
 """
 
 import ast
@@ -93,3 +97,48 @@ def test_graph_follows_function_local_imports():
     pipeline's consumers import it lazily, e.g. queries.q_pages_pipeline)."""
     modules = _package_modules()
     assert f"{PKG}.pipeline" in _imported(ROOT / PKG / "queries.py", modules)
+
+
+HELPER = (f"{PKG}.plans.session", "local_frame")
+
+
+def _create_dataframe_calls(path: pathlib.Path, skip_function: str | None = None):
+    """(line, enclosing function) of each ``*.createDataFrame(...)`` call,
+    leaving out the body of ``skip_function``."""
+    found = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if node.name == skip_function:
+                return
+            func = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+        ):
+            found.append((node.lineno, func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(ast.parse(path.read_text()), None)
+    return found
+
+
+def test_create_dataframe_only_in_local_frame():
+    stray = {}
+    for name, path in _package_modules().items():
+        skip = HELPER[1] if name == HELPER[0] else None
+        calls = _create_dataframe_calls(path, skip)
+        if calls:
+            stray[name] = calls
+    assert not stray, (
+        "build driver-side relations with plans.session.local_frame, "
+        f"not createDataFrame: {stray}"
+    )
+
+
+def test_create_dataframe_guard_sees_the_helper():
+    """Control: the walk finds the helper's own call when not skipped."""
+    path = _package_modules()[HELPER[0]]
+    assert [f for _, f in _create_dataframe_calls(path)] == [HELPER[1]]

@@ -89,3 +89,24 @@ def test_one_arrow_eval_per_udf(spark, sf_dir, name, udfs):
     assert max(Counter(calls).values()) == 1, plan
     assert len(nodes) == len(udfs), plan
     assert sorted(c.split("(")[0] for c in calls) == udfs, plan
+
+
+def test_flagship_plan_is_python_free_and_extracts_once(spark, tmp_path):
+    """The flagship, in perfbench's shape (parquet pages, no
+    repartition): no relation is a Python RDD, no Python UDF runs, and
+    the html decode and the geotag regex each appear once in the
+    executed plan. A second copy of either means it runs twice per row
+    (codegen CSE does not share subtrees across CASE branches)."""
+    from georeader_spark.pipeline import pages_pipeline
+    from georeader_spark.sources.pages import pages
+
+    path = str(tmp_path / "pages.parquet")
+    pages(spark, 500).write.parquet(path)
+    df = pages_pipeline(spark, pages_df=spark.read.parquet(path), repartition=False)
+    assert sum(r["n_pages"] for r in df.collect()) > 0
+    plan = _final_plan(df)
+    assert "Scan ExistingRDD" not in plan, plan
+    assert "LogicalRDD" not in plan, plan
+    assert "EvalPython" not in plan, plan
+    assert plan.count("StringDecode.decode(") == 1, plan
+    assert plan.count("regexp_extract(") == 1, plan
